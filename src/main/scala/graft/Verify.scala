@@ -7,13 +7,6 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Oracle invocations compute from the parquet inputs: session
-    // memos (the service's persisted model artifacts) are disabled
-    // here exactly as in Bench, so the dumped results come from fresh
-    // per-invocation computation (memoized == fresh is spec-pinned,
-    // but the oracle should not have to trust that).
-    System.setProperty(graft.queries.SessionMemo.Prop,
-      sys.env.getOrElse("SPARK_GRAFT_SESSION_MEMO", "off"))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

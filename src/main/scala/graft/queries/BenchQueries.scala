@@ -189,10 +189,12 @@ object BenchQueries {
 
   /** Topology 12: TridentWordCount (TridentWordCount.java:54) — the typed
    *  Dataset path: flatMap + groupByKey + a CombinerAggregator-shaped
-   *  `Aggregator` (same monoid contract as Trident Count). */
+   *  `Aggregator` (same monoid contract as Trident Count). A null text
+   *  contributes no words, as in [[wordcount]]. */
   def tridentWordcount(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    Tables.documents(spark, sfDir).select(col("text")).as[String]
+    Tables.documents(spark, sfDir).select(col("text"))
+      .filter(col("text").isNotNull).as[String]
       .flatMap(_.split("\\s+")).filter(_.nonEmpty)
       .groupByKey(identity)
       .agg(new CountAggregator[String]().toColumn.name("cnt"))

@@ -23,8 +23,6 @@ object JobProbe {
         sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    System.setProperty(graft.queries.SessionMemo.Prop,
-      sys.env.getOrElse("SPARK_GRAFT_SESSION_MEMO", "off"))
     val jobs = new AtomicInteger
     val stages = new AtomicInteger
     val tasks = new AtomicLong

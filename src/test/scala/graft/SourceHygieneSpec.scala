@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * `FanOut.fanOut`). Plan tests pin the queries that exist; this spec
  * pins the CODE so a new operator can't quietly reintroduce a raw
  * call site: every `.repartition(` in ops/ + queries/ must be one of
- * the frozen, individually-justified sites below.
+ * the frozen, individually-justified sites below. The last test keeps
+ * session memos out of queries/ the same way.
  */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -69,5 +70,40 @@ class SourceHygieneSpec extends AnyFunSuite {
       assert(got == n,
         s"$name has $got call sites, allowlist says $n — update the freeze")
     }
+  }
+
+  /** Receivers allowed a `computeIfAbsent` in queries/. A session memo
+   *  (a map that outlives the call, or a key built from the session's
+   *  UUID) would let a timed or oracle-checked invocation serve a
+   *  result an earlier one stored; every query computes from its
+   *  inputs instead. `coPairsBuilt` is not such a memo: it records
+   *  which written, named co-pairs table this application already has
+   *  (AnalyticsQueries.coPairsTable) and holds no computed frame. */
+  private val keyedCaches = Set("coPairsBuilt")
+
+  test("no session memo in queries/: computeIfAbsent only on the " +
+      "allowlisted keyed caches, and no session-UUID key") {
+    val queries = Paths.get("src/main/scala/graft/queries")
+    val offenders = scala.collection.mutable.ListBuffer.empty[String]
+    val seen = scala.collection.mutable.Set.empty[String]
+    Files.walk(queries).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && Files.isRegularFile(p))
+      .foreach { p: Path =>
+        val src = new String(Files.readAllBytes(p), "UTF-8")
+        "(?:(\\w+)\\s*\\.\\s*)?computeIfAbsent".r.findAllMatchIn(src)
+          .map(m => Option(m.group(1)).getOrElse("<expression>"))
+          .foreach { r =>
+            seen += r
+            if (!keyedCaches(r)) offenders += s"$p: $r.computeIfAbsent"
+          }
+        if ("(?i)session_?uuid".r.findFirstIn(src).isDefined)
+          offenders += s"$p: a key built from the session UUID"
+      }
+    assert(offenders.isEmpty, offenders.mkString(
+      "a query must compute from its inputs, not serve a result an " +
+        "earlier invocation stored:\n", "\n", ""))
+    assert(keyedCaches.subsetOf(seen),
+      s"allowlisted ${keyedCaches diff seen} no longer in queries/ — " +
+        "drop it from the allowlist")
   }
 }
