@@ -1,9 +1,10 @@
 #!/usr/bin/env bash
 # Two-arm oracle run: graft.Verify + scripts/check.py on one scale dir,
 # twice. The first arm runs with the default driver-kernel gates. The
-# second sets every count-before-collect gate to 0, so each gated query
-# takes its distributed arm instead of collecting to the driver. Exits
-# non-zero unless both arms pass every oracle.
+# second sets the cap of every one-job driver gate (one action that
+# collects the gated relation iff it fits under the cap) to 0, so each
+# gated query takes its distributed arm instead of collecting to the
+# driver. Exits non-zero unless both arms pass every oracle.
 #
 # Usage: scripts/verify_arms.sh <sfDir> [outRoot]
 #   sfDir    the parquet tables to verify (the oracle scale is sf0.01)

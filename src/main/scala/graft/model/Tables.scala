@@ -1,6 +1,11 @@
 package graft.model
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /**
  * Loaders for the driver-generated parquet tables (TESTDATA.md).
@@ -10,7 +15,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  */
 object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** A parquet read whose schema, for a single file without Spark's
+   *  row-metadata key, comes from the footer read on the driver:
+   *  `spark.read.parquet` infers it with a one-task Spark job per call
+   *  instead. The converter is built from the session conf, so it
+   *  honours the same flags inference does (`nanosAsLong` for
+   *  [[events]]). Directories and Spark-written files are inferred. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  private[graft] def footerSchema(spark: SparkSession,
+      path: String): Option[StructType] = {
+    val p = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = p.getFileSystem(conf)
+    if (!fs.isFile(p)) return None
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+    val meta = try reader.getFooter.getFileMetaData finally reader.close()
+    if (meta.getKeyValueMetaData.containsKey(ParquetReadSupport.SPARK_METADATA_KEY))
+      None
+    else Some(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      .convert(meta.getSchema))
+  }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "orders")

@@ -1240,8 +1240,7 @@ object DedupOps {
    */
   def connectedComponents(edges: DataFrame, nodes: DataFrame,
       maxIters: Int = 30,
-      driverCap: Long = LocalGraph.MaxDriverPairs,
-      rescanGate: Boolean = false): DataFrame = {
+      driverCap: Long = LocalGraph.MaxDriverPairs): DataFrame = {
     // reliable checkpoint when a checkpoint dir is configured (cluster
     // mode); executor-memory localCheckpoint otherwise (local/dev)
     def truncate(df: DataFrame): DataFrame = reliableTruncate(df)
@@ -1292,37 +1291,19 @@ object DedupOps {
         r.unpersist(blocking = false)
       }
     }
-    // ONE derivation of the caller's edge relation: the symmetrizing
-    // union references `edges` twice, and while exchange reuse covers
-    // shared shuffle subtrees, everything past the LAST exchange of
-    // the edge derivation (the minhash verify join + jaccard filter
-    // most callers pass in; er_self's lev verification) executed twice
-    // inside the sym0 job. Materialize the pairs once (pair-sized,
-    // fixed-width ids), symmetrize from the in-memory blocks, release
-    // the intermediate as soon as sym0 supersedes it.
-    // `rescanGate` callers (edge relations straight off a cheap
-    // pushed-filter table scan — graphComponents' backbone) gate
-    // WITHOUT the pre-gate snapshot: count + collect re-scan the table
-    // (cheaper than materializing into the block manager, the kCore
-    // rescanGate finding); computed edge relations (minhash verify
-    // joins) keep the single materialization.
     val eSel = edges.select(col("id1").as("src"), col("id2").as("dst"))
-    val e0 = if (rescanGate) eSel else truncate(eSel)
-    // DRIVER KERNEL under the count-before-collect gate (the bpe_learn
-    // device; rationale and budget in [[LocalGraph]]): the pair count
-    // is one cheap job over the materialized blocks, and under the cap
-    // the whole fixpoint — measured at 2-3 scheduled jobs PER ROUND of
-    // label propagation (graph_components: 46 jobs for 0.33 MB of
-    // total shuffle) — collapses to one union-find over the collected
-    // pairs, bit-identical by construction (min-label components are
-    // unique; LocalGraphSpec pins kernel == fixpoint on randomized
-    // graphs, and the specs force this arm off with driverCap = 0).
-    // Past the cap, or for non-long ids, the distributed fixpoint
-    // below runs unchanged — the honest graph-scale form.
-    val nPairs = e0.count() // cheap: in-memory blocks, or a table scan
-    LocalGraph.collectPairs(e0, nPairs, driverCap) match {
+    // DRIVER KERNEL under the one-job gate (the bpe_learn device;
+    // rationale and budget in [[LocalGraph]]): under the cap the whole
+    // fixpoint — measured at 2-3 scheduled jobs PER ROUND of label
+    // propagation (graph_components: 46 jobs for 0.33 MB of total
+    // shuffle) — collapses to one union-find over the collected pairs,
+    // bit-identical by construction (min-label components are unique;
+    // LocalGraphSpec pins kernel == fixpoint on randomized graphs, and
+    // the specs force this arm off with driverCap = 0). Past the cap,
+    // or for non-long ids, the distributed fixpoint below runs
+    // unchanged — the honest graph-scale form.
+    LocalGraph.collectPairs(eSel, driverCap) match {
       case Some(pairs) =>
-        if (!rescanGate) release(e0, checkpointFileOf(e0), rddOf(e0))
         val lbl = LocalGraph.componentMinLabels(pairs)
         val lf = LocalGraph.pairFrame(edges.sparkSession,
           lbl.iterator, lbl.size.toLong, "id", "cluster")
@@ -1334,7 +1315,15 @@ object DedupOps {
             coalesce(col("cluster"), col("id")).as("cluster"))
       case None => ()
     }
-    val e1 = if (rescanGate) truncate(eSel) else e0
+    // ONE derivation of the caller's edge relation: the symmetrizing
+    // union references `edges` twice, and while exchange reuse covers
+    // shared shuffle subtrees, everything past the LAST exchange of
+    // the edge derivation (the minhash verify join + jaccard filter
+    // most callers pass in; er_self's lev verification) would execute
+    // twice inside the sym0 job. Materialize the pairs once (pair-sized,
+    // fixed-width ids), symmetrize from the in-memory blocks, release
+    // the intermediate as soon as sym0 supersedes it.
+    val e1 = truncate(eSel)
     val sym0 = truncate(
       e1.union(e1.select(col("dst").as("src"), col("src").as("dst"))))
     release(e1, checkpointFileOf(e1), rddOf(e1))

@@ -8,7 +8,8 @@ import scala.collection.mutable
 /**
  * Driver-side EXACT kernels for the integer graph fixpoints
  * (connected components, k-core peel, multi-source BFS / shortest
- * paths, label propagation) behind a COUNT-BEFORE-COLLECT gate — the
+ * paths, label propagation, the triangle census and the micro-unit
+ * pagerank/ppr ranks) behind the one-job [[DriverGate]] — the
  * bpe_learn device (guide §1.2: fix the distributed algorithm before
  * the per-task work).
  *
@@ -21,23 +22,21 @@ import scala.collection.mutable
  * those rounds moves node-sized integer state that a single driver
  * core folds in milliseconds once the edge list is in hand.
  *
- * The gate: callers count the PAIR relation first (a count the
- * engines' broadcast verdicts already pay) and collect it only under
- * [[MaxDriverPairs]] (~64 MB of packed long pairs at the default —
- * same budget class as [[DedupOps.MaxBroadcastNodes]], env-tunable for
- * cluster drivers). Past the gate — the honest 100 TB form — the
- * distributed fixpoints run unchanged; unit specs force that arm with
- * `driverCap = 0` and pin bit-equality of both paths. Nothing is
- * cached across invocations: every call re-derives the edge relation
- * from its inputs, collects, and recomputes.
+ * The gate: callers hand the PAIR relation to [[collectPairs]], which
+ * collects it in one job iff it has at most [[MaxDriverPairs]] rows
+ * (~64 MB of packed long pairs at the default — same budget class as
+ * [[DedupOps.MaxBroadcastNodes]], env-tunable for cluster drivers).
+ * Past the gate — the honest 100 TB form — the caller snapshots the
+ * relation and runs its distributed fixpoint unchanged; unit specs
+ * force that arm with `driverCap = 0` and pin bit-equality of both
+ * paths. Nothing is cached across invocations: every call re-derives
+ * the edge relation from its inputs, collects, and recomputes.
  *
- * All five kernels are EXACT integer algorithms with deterministic
- * outputs (min-label components, unique k-core, min distances,
- * smallest-label tie-breaks), so driver results are bit-identical to
- * the distributed fixpoints — never a float-reassociation hazard (the
- * pagerank family stays distributed for exactly that reason... its
- * micro-unit arithmetic is order-safe too, but its per-round work is
- * real per-edge compute, not state bookkeeping).
+ * All kernels are EXACT integer algorithms with deterministic outputs
+ * (min-label components, unique k-core, min distances, smallest-label
+ * tie-breaks, order-independent long sums for the pagerank family's
+ * floored micro-unit ranks), so driver results are bit-identical to
+ * the distributed fixpoints — never a float-reassociation hazard.
  */
 object LocalGraph {
 
@@ -45,46 +44,28 @@ object LocalGraph {
    *  (~64 MB packed; the transient collect is bounded and released on
    *  return). Env-parameterized so a cluster deployment sizes it to
    *  its driver heap; 0 disables every driver kernel. */
-  private[graft] val MaxDriverPairs: Long = {
-    val default = 4000000L
-    sys.env.get("SPARK_GRAFT_DRIVER_GRAPH_PAIRS") match {
-      case None => default
-      case Some(raw) =>
-        scala.util.Try(raw.trim.toLong).toOption.filter(_ >= 0).getOrElse {
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            "SPARK_GRAFT_DRIVER_GRAPH_PAIRS='{}' is not a non-negative " +
-              "long; using the default {}", raw, default)
-          default
-        }
-    }
-  }
+  private[graft] val MaxDriverPairs: Long =
+    DriverGate.cap("SPARK_GRAFT_DRIVER_GRAPH_PAIRS", 4000000L)
 
-  /** Collect a two-long-column pair relation iff its row count is
-   *  known (counted by the caller — typically over an already
-   *  materialized snapshot) and under `cap`, and both columns are
-   *  LongType (string-keyed callers fall through to the distributed
-   *  engines). */
-  private[graft] def collectPairs(df: DataFrame, rows: Long,
+  /** A two-long-column pair relation on the driver iff it has at most
+   *  `cap` rows ([[DriverGate.collectUnder]] — one job) and both
+   *  columns are LongType (string-keyed callers fall through to the
+   *  distributed engines). */
+  private[graft] def collectPairs(df: DataFrame,
       cap: Long): Option[Array[(Long, Long)]] =
-    if (rows > cap || df.schema.fields.length != 2 ||
-        !df.schema.fields.forall(_.dataType == LongType)) None
-    else Some(df.toDF("_1", "_2")
-      .as(org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong))
-      .collect())
+    if (!allLong(df, 2)) None
+    else DriverGate.collectUnder(df, cap)(r => (r.getLong(0), r.getLong(1)))
 
   /** (u, v, cost) variant for the weighted kernels. */
-  private[graft] def collectTriples(df: DataFrame, rows: Long,
+  private[graft] def collectTriples(df: DataFrame,
       cap: Long): Option[Array[(Long, Long, Long)]] =
-    if (rows > cap || df.schema.fields.length != 3 ||
-        !df.schema.fields.forall(_.dataType == LongType)) None
-    else Some(df.toDF("_1", "_2", "_3")
-      .as(org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong))
-      .collect())
+    if (!allLong(df, 3)) None
+    else DriverGate.collectUnder(df, cap)(r =>
+      (r.getLong(0), r.getLong(1), r.getLong(2)))
+
+  private def allLong(df: DataFrame, arity: Int): Boolean =
+    df.schema.fields.length == arity &&
+      df.schema.fields.forall(_.dataType == LongType)
 
   /** Two-long-column DataFrame from driver rows, parallelized at the
    *  scale-adaptive width (never a LocalRelation — a node-sized local
@@ -308,19 +289,8 @@ object LocalGraph {
    *  edge count passes the pair gate but whose wedge volume does not
    *  still takes the distributed census. ~2^28 merge steps ≈ well
    *  under a second of driver time. */
-  private[graft] val MaxDriverTriWork: Long = {
-    val default = 1L << 28
-    sys.env.get("SPARK_GRAFT_DRIVER_TRI_WORK") match {
-      case None => default
-      case Some(raw) =>
-        scala.util.Try(raw.trim.toLong).toOption.filter(_ >= 0).getOrElse {
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            "SPARK_GRAFT_DRIVER_TRI_WORK='{}' is not a non-negative " +
-              "long; using the default {}", raw, default)
-          default
-        }
-    }
-  }
+  private[graft] val MaxDriverTriWork: Long =
+    DriverGate.cap("SPARK_GRAFT_DRIVER_TRI_WORK", 1L << 28)
 
   /** Exact degree-orientation triangle census (the census engine's
    *  adjacency-intersection arm, driver-side): each undirected edge

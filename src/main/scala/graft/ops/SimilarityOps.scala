@@ -232,19 +232,8 @@ object SimilarityOps {
    *  vectors ≈ 64 MB of 64-dim floats — the LocalGraph.MaxDriverPairs
    *  budget class; 0 disables it, env-parameterized for cluster
    *  drivers). */
-  private[graft] val KmDriverMaxVectors: Long = {
-    val default = 250000L
-    sys.env.get("SPARK_GRAFT_DRIVER_KM_VECS") match {
-      case None => default
-      case Some(raw) =>
-        scala.util.Try(raw.trim.toLong).toOption.filter(_ >= 0).getOrElse {
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            "SPARK_GRAFT_DRIVER_KM_VECS='{}' is not a non-negative " +
-              "long; using the default {}", raw, default)
-          default
-        }
-    }
-  }
+  private[graft] val KmDriverMaxVectors: Long =
+    DriverGate.cap("SPARK_GRAFT_DRIVER_KM_VECS", 250000L)
 
   /** Spark's FLOAT → DECIMAL(20,10) cast, driver-side: the decimal
    *  string value of the widened double (BigDecimal.valueOf ==
@@ -324,7 +313,7 @@ object SimilarityOps {
    */
   def kmeansCentroids(emb: DataFrame, k: Int, iters: Int,
       driverCap: Long = KmDriverMaxVectors): Array[Array[Float]] = {
-    // DRIVER KERNEL under the count-before-collect gate (the
+    // DRIVER KERNEL under the one-job gate (the
     // bpe_learn / LocalGraph device): each distributed Lloyd round is
     // one serial assignment+explode+agg+collect job over a corpus
     // whose k × dim decimal partials fit in kilobytes — measured as
@@ -339,13 +328,11 @@ object SimilarityOps {
     // overflow (impossible under the cap for unit-scale embeddings,
     // but checked) falls through to the distributed rounds, as does
     // any corpus past the cap — the honest 100 TB form.
-    if (emb.count() <= driverCap) {
-      val rows = emb.select(col("vec_id"), col("embedding")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      kmeansLloydLocal(rows, k, iters) match {
-        case Some(c) => return c
-        case None => ()
-      }
+    DriverGate.collectUnder(emb.select(col("vec_id"), col("embedding")),
+        driverCap)(r => (r.getLong(0), r.getArray(1).toFloatArray()))
+      .flatMap(kmeansLloydLocal(_, k, iters)) match {
+      case Some(c) => return c
+      case None => ()
     }
     var cents = seedCentroids(emb, k)
     for (_ <- 0 until iters) {

@@ -1155,19 +1155,8 @@ object PipelineQueries {
   /** Feature-row gate for the driver-side gradient loop (default 4M
    *  (doc, bucket) rows ≈ 160 MB collected — the LocalGraph budget
    *  class; 0 disables it, env-parameterized for cluster drivers). */
-  private val ClassifyDriverMaxRows: Long = {
-    val default = 4000000L
-    sys.env.get("SPARK_GRAFT_DRIVER_CLASSIFY_ROWS") match {
-      case None => default
-      case Some(raw) =>
-        scala.util.Try(raw.trim.toLong).toOption.filter(_ >= 0).getOrElse {
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            "SPARK_GRAFT_DRIVER_CLASSIFY_ROWS='{}' is not a non-negative " +
-              "long; using the default {}", raw, default)
-          default
-        }
-    }
-  }
+  private val ClassifyDriverMaxRows: Long =
+    graft.ops.DriverGate.cap("SPARK_GRAFT_DRIVER_CLASSIFY_ROWS", 4000000L)
 
   private def trainClassifierWeightsWithFeatures(
       corpus: DataFrame): (Array[Long], DataFrame) =
@@ -1178,7 +1167,7 @@ object PipelineQueries {
     val micro = 1000000.0
     val feats = classifierFeatures(corpus).localCheckpoint()
     val w = Array.fill(ClassifyDim.toInt)(0L)
-    // DRIVER KERNEL under the count-before-collect gate (the
+    // DRIVER KERNEL under the one-job gate (the
     // bpe_learn / LocalGraph device): each of the TrainIters gradient
     // rounds is a doc-keyed agg + join + 64-group agg + collect —
     // measured 32 serial jobs / 3.1 s (JobProbe sf0.1/32c) moving
@@ -1190,12 +1179,12 @@ object PipelineQueries {
     // — so the weights are bit-identical by construction
     // (ClassifySpec pins driver == distributed). Past the cap the
     // distributed rounds below run unchanged — the honest 100 TB form.
-    val nFeat = feats.count() // cheap: in-memory checkpointed blocks
-    if (nFeat <= driverCap) {
-      val rows = feats.select(col("doc_id"), col("y"), col("n_words"),
-          col("bucket"), col("c")).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-          r.getLong(3), r.getLong(4)))
+    val driverRows = graft.ops.DriverGate.collectUnder(
+        feats.select(col("doc_id"), col("y"), col("n_words"),
+          col("bucket"), col("c")), driverCap)(r =>
+      (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+    if (driverRows.nonEmpty) {
+      val rows = driverRows.get
       val docIdx = scala.collection.mutable.LongMap.empty[Int]
       val docY = scala.collection.mutable.ArrayBuffer.empty[Int]
       rows.foreach { case (doc, y, _, _, _) =>
@@ -1455,18 +1444,32 @@ object PipelineQueries {
     bpeLearnOf(Tables.documents(spark, sfDir), TokenizerDriverVocab)
 
   /** Word-frequency dicts at or under this row count run the tokenizer
-   *  MERGE LOOPS driver-side ([[bpeLearnOf]]/[[wordpieceLearnOf]]): the
-   *  dict collects behind a count-before-collect gate (the bounded
-   *  model-artifact contract — the dict IS the model input, and it is
-   *  what every production tokenizer trainer holds in memory) and the K
-   *  merge rounds run as plain Scala over it, replacing ~2K serial
-   *  vocab-sized Spark jobs (pair agg + argmax collect per rule, plus
+   *  LEARNING LOOPS driver-side ([[bpeLearnOf]], [[wordpieceLearnOf]],
+   *  [[unigramLearnOf]]): the dict collects behind the one-job
+   *  [[graft.ops.DriverGate]] (the bounded model-artifact contract —
+   *  the dict IS the model input, and it is what every production
+   *  tokenizer trainer holds in memory) and the rounds run as plain
+   *  Scala over it, replacing the serial vocab-sized Spark jobs (~2K
+   *  for the merge loops: pair agg + argmax collect per rule, plus
    *  stride checkpoints) with zero. Past the cap the distributed loop
    *  stands — the honest form where the dict outgrows driver memory.
    *  Env-parameterized (the MaxBroadcastNodes device); ~100 MB of
    *  (word, freq) rows at the default. */
   private[graft] val TokenizerDriverVocab: Long =
-    sys.env.getOrElse("SPARK_GRAFT_TOKENIZER_DRIVER_VOCAB", "1000000").toLong
+    graft.ops.DriverGate.cap("SPARK_GRAFT_TOKENIZER_DRIVER_VOCAB", 1000000L)
+
+  /** The (w, freq) word-frequency dict every tokenizer learner trains
+   *  on: ONE corpus pass (lower-cased whitespace words). */
+  private def wordFreqs(docs: DataFrame): DataFrame =
+    FanOut.fanOut(docs)
+      .select(explode(TextAnalyticsOps.words(lower(col("text")))).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("freq"))
+
+  /** The dict on the driver iff it has at most `cap` words. */
+  private def driverDict(vocab: DataFrame,
+      cap: Long): Option[Array[(String, Long)]] =
+    graft.ops.DriverGate.collectUnder(vocab, cap)(r =>
+      (r.getUTF8String(0).toString, r.getLong(1)))
 
   /** Spark's string sort order (UTF8String.binaryCompare = unsigned
    *  UTF-8 byte order) for driver-side tie-breaks — String.compareTo
@@ -1631,23 +1634,17 @@ object PipelineQueries {
   private[graft] def bpeLearnOf(docs: DataFrame, driverCap: Long): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // ONE corpus pass either way: the dict materializes eagerly, then
-    // the count-before-collect gate reads the snapshot, not the corpus
-    val vocab = FanOut.fanOut(docs)
-      .select(explode(TextAnalyticsOps.words(lower(col("text")))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-      .localCheckpoint()
-    if (vocab.count() <= driverCap) {
-      val dict = vocab.collect().map(r => (r.getString(0), r.getLong(1)))
-      graft.ops.DedupOps.releaseTruncated(vocab)
-      return driverMergeRules(dict, BpeLearnK, wordpiece = false)
-        .map { case (r, a, b, _) => (r, a, b) }.toDF("rank", "a", "b")
+    val vocab = wordFreqs(docs)
+    driverDict(vocab, driverCap) match {
+      case Some(dict) =>
+        return driverMergeRules(dict, BpeLearnK, wordpiece = false)
+          .map { case (r, a, b, _) => (r, a, b) }.toDF("rank", "a", "b")
+      case None => ()
     }
     val chars = filter(split(col("w"), ""), c => length(c) > 0)
     var segs = vocab
       .select(col("freq"), chars.as("ss"))
       .localCheckpoint()
-    graft.ops.DedupOps.releaseTruncated(vocab)
     var lastCkpt = segs // the checkpoint HANDLE (releaseTruncated contract)
     var sinceTrunc = 0
     val rules = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String)]
@@ -1751,18 +1748,14 @@ object PipelineQueries {
       driverCap: Long): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // ONE corpus pass either way (the bpeLearnOf gate)
-    val vocab = FanOut.fanOut(docs)
-      .select(explode(TextAnalyticsOps.words(lower(col("text")))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-      .localCheckpoint()
-    if (vocab.count() <= driverCap) {
-      val dict = vocab.collect().map(r => (r.getString(0), r.getLong(1)))
-      graft.ops.DedupOps.releaseTruncated(vocab)
-      return driverMergeRules(dict, WordpieceLearnK, wordpiece = true)
-        .toDF("rank", "a", "b", "score")
-        .select(col("rank"), col("a"), col("b"),
-          round(col("score"), 6).as("score_r"))
+    val vocab = wordFreqs(docs)
+    driverDict(vocab, driverCap) match {
+      case Some(dict) =>
+        return driverMergeRules(dict, WordpieceLearnK, wordpiece = true)
+          .toDF("rank", "a", "b", "score")
+          .select(col("rank"), col("a"), col("b"),
+            round(col("score"), 6).as("score_r"))
+      case None => ()
     }
     val chars = filter(split(col("w"), ""), c => length(c) > 0)
     val syms = transform(chars,
@@ -1770,7 +1763,6 @@ object PipelineQueries {
     var segs = vocab
       .select(col("freq"), syms.as("ss"))
       .localCheckpoint()
-    graft.ops.DedupOps.releaseTruncated(vocab)
     var lastCkpt = segs // the checkpoint HANDLE (releaseTruncated contract)
     var sinceTrunc = 0
     val rules =
@@ -1908,46 +1900,95 @@ object PipelineQueries {
    * loss-ranked prune all re-derived in SQL ([[Oracles.unigramLearn]];
    * non-circularity: only hyperparameters are shared).
    */
-  def unigramLearn(spark: SparkSession, sfDir: String): DataFrame = {
+  def unigramLearn(spark: SparkSession, sfDir: String): DataFrame =
+    unigramLearnOf(Tables.documents(spark, sfDir), TokenizerDriverVocab)
+
+  /** The learning loop of [[unigramLearn]] over any (text) frame with
+   *  an explicit driver-dict cap — factored for the
+   *  driver==distributed equivalence spec. Under the cap the dict
+   *  collects once and the seed and every round's piece counts run as
+   *  plain Scala over it, with Spark's semantics: code-point
+   *  `length`/`substr`, (cnt desc, piece) ties in UTF-8 byte order,
+   *  the same [[graft.functions.VectorMath.unigramSegment]] kernel, and
+   *  `split(seg, " ")` keeping trailing empty strings. */
+  private[graft] def unigramLearnOf(docs: DataFrame,
+      driverCap: Long): DataFrame = {
+    val spark = docs.sparkSession
     import spark.implicits._
     val sc = spark.sparkContext
-    val vocab = FanOut.fanOut(Tables.documents(spark, sfDir))
-      .select(explode(TextAnalyticsOps.words(lower(col("text")))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-      .localCheckpoint()
-    // seed: substrings with multiplicity, corpus-weighted (vocab-sized
-    // frame; the two explodes stay inside one task per vocab slice)
-    val subs = vocab
-      .select(col("w"), col("freq"),
-        explode(sequence(lit(1), length(col("w")))).as("i"))
-      .select(col("w"), col("freq"), col("i"),
-        explode(sequence(lit(1),
-          least(lit(UnigramMaxPiece), length(col("w")) - col("i") + 1)))
-          .as("l"))
-      .select(col("freq"), col("w").substr(col("i"), col("l")).as("piece"))
-      .groupBy("piece").agg(sum(col("freq")).as("cnt"))
-    val singles = subs.filter(length(col("piece")) === 1)
-    val multis = subs.filter(length(col("piece")) >= 2)
-      .orderBy(col("cnt").desc, col("piece")).limit(UnigramSeedK)
+    val dict = driverDict(wordFreqs(docs), driverCap)
+    // past the cap every round scans the vocab: materialize it once
+    val vocab =
+      if (dict.isEmpty) Some(wordFreqs(docs).localCheckpoint()) else None
+    // seed: substrings with multiplicity, corpus-weighted
+    val seed: Array[(String, Long)] = dict match {
+      case Some(d) =>
+        val subs = scala.collection.mutable.HashMap.empty[String, Long]
+        d.foreach { case (w, f) =>
+          val cps = w.codePoints().toArray
+          for (i <- cps.indices;
+               l <- 1 to math.min(UnigramMaxPiece, cps.length - i)) {
+            val p = new String(cps, i, l)
+            subs(p) = subs.getOrElse(p, 0L) + f
+          }
+        }
+        val (singles, multis) = subs.toArray
+          .partition(e => e._1.codePointCount(0, e._1.length) == 1)
+        singles ++ multis.sortWith((x, y) =>
+          if (x._2 != y._2) x._2 > y._2 else utf8Lt(x._1, y._1))
+          .take(UnigramSeedK)
+      case None =>
+        // vocab-sized frame; the two explodes stay inside one task per
+        // vocab slice
+        val subs = vocab.get
+          .select(col("w"), col("freq"),
+            explode(sequence(lit(1), length(col("w")))).as("i"))
+          .select(col("w"), col("freq"), col("i"),
+            explode(sequence(lit(1),
+              least(lit(UnigramMaxPiece), length(col("w")) - col("i") + 1)))
+              .as("l"))
+          .select(col("freq"), col("w").substr(col("i"), col("l")).as("piece"))
+          .groupBy("piece").agg(sum(col("freq")).as("cnt"))
+        val singles = subs.filter(length(col("piece")) === 1)
+        val multis = subs.filter(length(col("piece")) >= 2)
+          .orderBy(col("cnt").desc, col("piece")).limit(UnigramSeedK)
+        singles.unionByName(multis).collect()
+          .map(r => (r.getString(0), r.getLong(1)))
+    }
+    // hard-EM E-step: corpus-weighted Viterbi piece counts under the
+    // (sorted pieces, costs) model
+    def pieceCounts(pieces: Array[String],
+        costs: Array[Long]): Map[String, Long] = dict match {
+      case Some(d) =>
+        val counts = scala.collection.mutable.HashMap.empty[String, Long]
+        d.foreach { case (w, f) =>
+          graft.functions.VectorMath.unigramSegment(w, pieces, costs,
+            UnigramMaxPiece).split(" ", -1).foreach { p =>
+            counts(p) = counts.getOrElse(p, 0L) + f
+          }
+        }
+        counts.toMap
+      case None =>
+        val bcP = sc.broadcast(pieces)
+        val bcC = sc.broadcast(costs)
+        val counts = vocab.get
+          .select(col("freq"), explode(split(
+            graft.functions.native.unigram_segment(col("w"), bcP, bcC,
+              UnigramMaxPiece), " ")).as("piece"))
+          .groupBy("piece").agg(sum(col("freq")).as("cnt"))
+          .collect().map(row => row.getString(0) -> row.getLong(1)).toMap
+        bcP.unpersist(); bcC.unpersist()
+        counts
+    }
     def costsOf(cnts: Array[(String, Long)]): Array[(String, Long, Long)] = {
       val tot = cnts.map(_._2).sum
       val k = cnts.length
       cnts.map { case (p, c) => (p, c, unigramMicro(c, tot, k)) }
     }
-    var cur: Array[(String, Long, Long)] = costsOf(
-      singles.unionByName(multis).collect()
-        .map(r => (r.getString(0), r.getLong(1))))
+    var cur: Array[(String, Long, Long)] = costsOf(seed)
     for (r <- 1 to UnigramRounds) {
       val sorted = cur.sortBy(_._1)
-      val bcP = sc.broadcast(sorted.map(_._1))
-      val bcC = sc.broadcast(sorted.map(_._3))
-      val counts = vocab
-        .select(col("freq"), explode(split(
-          graft.functions.native.unigram_segment(col("w"), bcP, bcC,
-            UnigramMaxPiece), " ")).as("piece"))
-        .groupBy("piece").agg(sum(col("freq")).as("cnt"))
-        .collect().map(row => row.getString(0) -> row.getLong(1)).toMap
-      bcP.unpersist(); bcC.unpersist()
+      val counts = pieceCounts(sorted.map(_._1), sorted.map(_._3))
       val withCnt = cur.map { case (p, _, _) => (p, counts.getOrElse(p, 0L)) }
       val kept: Array[(String, Long)] =
         if (r == UnigramRounds) withCnt
@@ -1965,7 +2006,7 @@ object PipelineQueries {
         }
       cur = costsOf(kept)
     }
-    graft.ops.DedupOps.releaseTruncated(vocab)
+    vocab.foreach(graft.ops.DedupOps.releaseTruncated)
     cur.toSeq.toDF("piece", "cnt", "cost_micro")
   }
 
@@ -4251,7 +4292,7 @@ object PipelineQueries {
    *  Ignores sfDir by construction (the fixture is scale-free). */
   def mmDecodePng(spark: SparkSession, sfDir: String): DataFrame =
     MultimodalOps.decodeImagePartitioned(
-      spark.read.parquet(graft.tools.PngFixture.Path), "img_id", "png")
+      Tables.parquet(spark, graft.tools.PngFixture.Path), "img_id", "png")
       .toDF()
       .select(col("id").as("img_id"),
         col("width").cast("bigint").as("width"),
@@ -4271,7 +4312,7 @@ object PipelineQueries {
    *  exact hash compare. Ignores sfDir (scale-free fixture). */
   def mmDecodeJpeg(spark: SparkSession, sfDir: String): DataFrame =
     MultimodalOps.decodeImagePartitioned(
-      spark.read.parquet(graft.tools.JpegFixture.Path), "img_id", "jpeg")
+      Tables.parquet(spark, graft.tools.JpegFixture.Path), "img_id", "jpeg")
       .toDF()
       .select(col("id").as("img_id"),
         col("width").cast("bigint").as("width"),
@@ -4291,7 +4332,7 @@ object PipelineQueries {
     val B = graft.tools.ImageRemuxFixture.IdBase
     val M = graft.tools.ImageRemuxFixture.M
     MultimodalOps.decodeImagePartitioned(
-      spark.read.parquet(graft.tools.ImageRemuxFixture.Path)
+      Tables.parquet(spark, graft.tools.ImageRemuxFixture.Path)
         .filter(col("img_id") >= B + 2 * M && col("img_id") < B + 3 * M),
       "img_id", "image")
       .toDF()
@@ -4314,7 +4355,7 @@ object PipelineQueries {
    *  round-trip together. Ignores sfDir (scale-free fixture). */
   def mmDecodeResize(spark: SparkSession, sfDir: String): DataFrame =
     MultimodalOps.decodeImageResized(
-      spark.read.parquet(graft.tools.PngFixture.Path), "img_id", "png",
+      Tables.parquet(spark, graft.tools.PngFixture.Path), "img_id", "png",
       ResizeFactor)
       .toDF()
       .select(col("id").as("img_id"),
@@ -4334,7 +4375,7 @@ object PipelineQueries {
    *  (the fixture is scale-free). */
   def mmDecodeWav(spark: SparkSession, sfDir: String): DataFrame =
     MultimodalOps.decodeWavPartitioned(
-      spark.read.parquet(graft.tools.WavFixture.Path), "clip_id", "wav")
+      Tables.parquet(spark, graft.tools.WavFixture.Path), "clip_id", "wav")
       .toDF()
       .select(col("id").as("clip_id"),
         col("sample_rate").cast("bigint").as("sample_rate"),
@@ -4355,7 +4396,7 @@ object PipelineQueries {
    *  as VALUES literals. Ignores sfDir (scale-free fixture). */
   def mmAudioFeatures(spark: SparkSession, sfDir: String): DataFrame =
     MultimodalOps.audioFrameFeaturesPartitioned(
-      spark.read.parquet(graft.tools.WavFixture.Path), "clip_id", "wav",
+      Tables.parquet(spark, graft.tools.WavFixture.Path), "clip_id", "wav",
       graft.tools.WavFixture.FrameWin, graft.tools.WavFixture.SilenceThr)
       .toDF()
       .select(col("id").as("clip_id"), col("n_windows"),
@@ -4395,11 +4436,11 @@ object PipelineQueries {
    *  re-master fixture (id ranges disjoint by construction —
    *  [[graft.tools.AudioRemuxFixture.IdBase]]). */
   private def mixedAudioCorpus(spark: SparkSession): DataFrame =
-    spark.read.parquet(graft.tools.AudioDupFixture.Path)
+    Tables.parquet(spark, graft.tools.AudioDupFixture.Path)
       .select(col("clip_id"), col("wav").as("audio"))
-      .unionAll(spark.read.parquet(graft.tools.AudioRemuxFixture.Path)
+      .unionAll(Tables.parquet(spark, graft.tools.AudioRemuxFixture.Path)
         .select(col("clip_id"), col("audio")))
-      .unionAll(spark.read.parquet(graft.tools.AiffRemuxFixture.Path)
+      .unionAll(Tables.parquet(spark, graft.tools.AiffRemuxFixture.Path)
         .select(col("clip_id"), col("audio")))
 
   /** AUDIO NEAR-DUP pairs — the perceptual-hash dedup loop on sound,
@@ -4472,7 +4513,7 @@ object PipelineQueries {
     // The handle stays live under the returned frame — left to the
     // ContextCleaner (the pagerank non-boundary convention)
     val base = MultimodalOps.phashPartitioned(
-      spark.read.parquet(PngFixture.Path), "img_id", "png", PhashShift)
+      Tables.parquet(spark, PngFixture.Path), "img_id", "png", PhashShift)
       .toDF()
       .select(col("id").as("img_id"), col("phash"),
         bit_count(col("phash").bitwiseXOR(col("phash_shifted")))
@@ -4546,9 +4587,9 @@ object PipelineQueries {
    *  re-encode fixture (id ranges disjoint by construction —
    *  [[graft.tools.ImageRemuxFixture.IdBase]]). */
   private def mixedImageCorpus(spark: SparkSession): DataFrame =
-    spark.read.parquet(graft.tools.PngFixture.Path)
+    Tables.parquet(spark, graft.tools.PngFixture.Path)
       .select(col("img_id"), col("png").as("image"))
-      .unionAll(spark.read.parquet(graft.tools.ImageRemuxFixture.Path)
+      .unionAll(Tables.parquet(spark, graft.tools.ImageRemuxFixture.Path)
         .select(col("img_id"), col("image")))
 
   /** The [[mmPhashClusters]] engine over any image frame (columns
@@ -4651,11 +4692,11 @@ object PipelineQueries {
    *  re-mux fixture (id ranges disjoint by construction —
    *  [[graft.tools.VideoRemuxFixture.IdBase]]). */
   private def mixedVideoCorpus(spark: SparkSession): DataFrame =
-    spark.read.parquet(graft.tools.VideoDupFixture.Path)
+    Tables.parquet(spark, graft.tools.VideoDupFixture.Path)
       .select(col("clip_id"), col("gif").as("video"))
-      .unionAll(spark.read.parquet(graft.tools.VideoRemuxFixture.Path)
+      .unionAll(Tables.parquet(spark, graft.tools.VideoRemuxFixture.Path)
         .select(col("clip_id"), col("video")))
-      .unionAll(spark.read.parquet(graft.tools.Mp4RemuxFixture.Path)
+      .unionAll(Tables.parquet(spark, graft.tools.Mp4RemuxFixture.Path)
         .select(col("clip_id"), col("video")))
 
   /** The [[mmVideoNeardup]] engine over any (clip_id, video) frame
@@ -4748,7 +4789,7 @@ object PipelineQueries {
    *  sfDir (scale-free fixture). */
   def mmFramesGif(spark: SparkSession, sfDir: String): DataFrame =
     MultimodalOps.decodeGifFramesPartitioned(
-      spark.read.parquet(graft.tools.GifFixture.Path), "clip_id", "gif")
+      Tables.parquet(spark, graft.tools.GifFixture.Path), "clip_id", "gif")
       .toDF()
       .select(col("id").as("clip_id"), col("n_frames"),
         col("width").cast("bigint").as("width"),
@@ -4771,7 +4812,7 @@ object PipelineQueries {
    *  sfDir by construction (the fixture is scale-free). */
   def mmProbeMp4(spark: SparkSession, sfDir: String): DataFrame =
     MultimodalOps.probeMp4Partitioned(
-      spark.read.parquet(graft.tools.Mp4Fixture.Path), "clip_id", "mp4")
+      Tables.parquet(spark, graft.tools.Mp4Fixture.Path), "clip_id", "mp4")
       .toDF()
       .select(col("id").as("clip_id"), col("brand"), col("timescale"),
         col("duration_ms"), col("n_tracks"), col("mdat_bytes"))
@@ -4790,7 +4831,7 @@ object PipelineQueries {
    *  compare. Ignores sfDir (scale-free fixture). */
   def mmFramesMjpeg(spark: SparkSession, sfDir: String): DataFrame =
     MultimodalOps.decodeMjpegAviPartitioned(
-      spark.read.parquet(graft.tools.AviFixture.Path), "clip_id", "avi")
+      Tables.parquet(spark, graft.tools.AviFixture.Path), "clip_id", "avi")
       .toDF()
       .select(col("id").as("clip_id"), col("n_frames"),
         col("width").cast("bigint").as("width"),
@@ -4814,7 +4855,7 @@ object PipelineQueries {
    *  Ignores sfDir (scale-free fixture). */
   def mmFramesMp4(spark: SparkSession, sfDir: String): DataFrame =
     MultimodalOps.decodeMjpegMp4Partitioned(
-      spark.read.parquet(graft.tools.Mp4RemuxFixture.Path),
+      Tables.parquet(spark, graft.tools.Mp4RemuxFixture.Path),
       "clip_id", "video")
       .toDF()
       .select(col("id").as("clip_id"), col("n_frames"),

@@ -14,8 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * `FanOut.fanOut`). Plan tests pin the queries that exist; this spec
  * pins the CODE so a new operator can't quietly reintroduce a raw
  * call site: every `.repartition(` in ops/ + queries/ must be one of
- * the frozen, individually-justified sites below. The last test keeps
- * session memos out of queries/ the same way.
+ * the frozen, individually-justified sites below. The last two tests
+ * keep raw parquet reads and session memos out the same way.
  */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -70,6 +70,23 @@ class SourceHygieneSpec extends AnyFunSuite {
       assert(got == n,
         s"$name has $got call sites, allowlist says $n — update the freeze")
     }
+  }
+
+  test("no spark.read.parquet( in ops/ or queries/: every batch table " +
+      "read goes through Tables (footer schema, no inference job)") {
+    val offenders = scala.collection.mutable.ListBuffer.empty[String]
+    roots.foreach { root =>
+      Files.walk(Paths.get(root)).iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") && Files.isRegularFile(p))
+        .foreach { p: Path =>
+          val n = "\\bread\\s*\\.\\s*parquet\\(".r
+            .findAllIn(new String(Files.readAllBytes(p), "UTF-8")).size
+          if (n > 0) offenders += s"$p: $n spark.read.parquet( call sites"
+        }
+    }
+    assert(offenders.isEmpty, offenders.mkString(
+      "read tables with graft.model.Tables.parquet (or a named loader), " +
+        "which skips the one-task schema-inference job:\n", "\n", ""))
   }
 
   /** Receivers allowed a `computeIfAbsent` in queries/. A session memo

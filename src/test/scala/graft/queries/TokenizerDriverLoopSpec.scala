@@ -2,10 +2,10 @@ package graft.queries
 
 import graft.SparkSpec
 
-/** Driver-side tokenizer merge loop ([[PipelineQueries.bpeLearnOf]] /
-  * [[PipelineQueries.wordpieceLearnOf]] under
-  * [[PipelineQueries.TokenizerDriverVocab]]) == the distributed fold,
-  * row-for-row including the wordpiece one-division scores. The cap
+/** Driver-side tokenizer learning loops ([[PipelineQueries.bpeLearnOf]] /
+  * [[PipelineQueries.wordpieceLearnOf]] / [[PipelineQueries.unigramLearnOf]]
+  * under [[PipelineQueries.TokenizerDriverVocab]]) == the distributed
+  * loops, row-for-row including the wordpiece one-division scores. The cap
   * parameter forces each path: 0 → distributed (the 100 TB form),
   * Long.MaxValue → driver. Corpora are chosen so the loops exercise
   * ties, same-symbol runs, and early merge interactions — the exact
@@ -60,6 +60,33 @@ class TokenizerDriverLoopSpec extends SparkSpec {
       assert(drv == dist, s"corpus $i: first divergence " +
         s"${drv.zip(dist).find(p => p._1 != p._2)} " +
         s"(driver ${drv.size} rules, distributed ${dist.size})")
+    }
+  }
+
+  test("unigramLearnOf: driver arm == distributed arm on every fixture " +
+      "corpus, on ties in UTF-8 order, non-ASCII and supplementary text, " +
+      "and on sf0.001 documents (pieces, counts and costs, row-for-row)") {
+    // 47 ASCII 2-char words + two that UTF-16 and UTF-8 order apart:
+    // 49 multi-char pieces tied at count 1 for 48 seed slots, so the
+    // seed cut is decided by the (cnt desc, piece) tie-break alone
+    val ascii = (for (a <- 'a' to 'g'; b <- 'h' to 'z') yield s"$a$b").take(47)
+    val ties = Seq((ascii :+ "\uff41\uff41" :+ "\ud83d\ude00\ud83d\ude00")
+      .mkString(" "))
+    val nonAscii = Seq("café naïve éé über straße ßß ñandú ñandú café",
+      "δέλτα δέλτα αβγ βγ ωω жук жук")
+    val supplementary = Seq("\ud835\udd18\ud835\udd2b\ud835\udd26 " +
+      "a\ud835\udd18b a\ud835\udd18b \ud83d\ude00x\ud83d\ude00 xy")
+    val frames = (corpora :+ ties :+ nonAscii :+ supplementary).map(df) :+
+      spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    frames.zipWithIndex.foreach { case (docs, i) =>
+      def learn(cap: Long) = PipelineQueries.unigramLearnOf(docs, cap)
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+        .toSeq.sortBy(_._1)
+      val drv = learn(Long.MaxValue)
+      val dist = learn(0L)
+      assert(drv == dist, s"corpus $i: first divergence " +
+        s"${drv.zip(dist).find(p => p._1 != p._2)} " +
+        s"(driver ${drv.size} pieces, distributed ${dist.size})")
     }
   }
 
